@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -27,3 +29,25 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF_DIR, t)}')"
         )
     yield con
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` leaves in ``jobs`` the ids of
+    the Spark jobs the block started (its own job group, read once the
+    listener bus has delivered every event)."""
+
+    @contextlib.contextmanager
+    def counting():
+        sc = spark.sparkContext
+        group = f"pytest-jobs-{uuid.uuid4().hex}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return counting

@@ -213,3 +213,63 @@ def test_quickview(cards, items):
     assert "samkirby22" in by_cat["Owners"] or "sam" in by_cat["Owners"]
     assert by_cat["Labels"] == ["!Label", "Alpha", "Beta"]
     assert by_cat["Checklists"] == ["QA Task", "Specification Task"]
+
+
+def test_quickview_job_floor(spark, tmp_path, spark_jobs):
+    """The board dimensions are literal maps (collected while the
+    frames are built), so collecting the quickview table and distincts
+    starts at most 11 Spark jobs, and no plan joins or aggregates a
+    dimension. The board is read from its own file, so no frame cached
+    by the other tests stands in for any part of the plan."""
+    p = tmp_path / "board.json"
+    p.write_text(json.dumps(BOARD))
+    ents = normalize_board(read_board(spark, str(p)))
+    cards = customize_cards(ents, STATUS_MAP, SECADM)
+    items = customize_check_items(ents, active_card_ids=cards)
+    table = quickview_table(cards, items)
+    distincts = quickview_distincts(cards, items)
+    with spark_jobs() as jobs:
+        table.collect()
+        distincts.collect()
+    assert len(jobs) <= 11
+    for df in (table, distincts):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "ObjectHashAggregate" not in plan
+
+
+def test_missing_and_empty_dimensions(spark, tmp_path):
+    """A board without customFields and with no members: custom field
+    and member lookups miss (null), owners fall back to ``!Owner`` and
+    unassigned items to ``!Assigned``."""
+    board = dict(BOARD, members=[])
+    del board["customFields"]
+    board["cards"] = [
+        _card("e1", "No fields", "L1", members=["m1"]),
+        _card("e2", "Unknown field", "L1", cfi=[_secadm("alice")],
+              checklists=[{
+                  "id": "cle", "name": "QA Tasks", "idCard": "e2",
+                  "idBoard": "B1", "pos": 1.0,
+                  "checkItems": [
+                      _item("ie1", "cle", "unassigned"),
+                      _item("ie2", "cle", "assigned", member="m1"),
+                  ],
+              }]),
+    ]
+    board["checklists"] = []
+    p = tmp_path / "board.json"
+    p.write_text(json.dumps(board))
+    ents = normalize_board(read_board(spark, str(p)))
+    cards = customize_cards(ents, STATUS_MAP, SECADM)
+    items = customize_check_items(ents, active_card_ids=cards)
+
+    rows = {r.id: r for r in cards.collect()}
+    assert rows["e1"].custom_field_names == []
+    assert rows["e2"].custom_field_names == [None]
+    assert rows["e1"].member_usernames == [None]
+    assert {r.owner for r in rows.values()} == {"!Owner"}
+    assert {r.id: r.assignee for r in items.collect()} == {
+        "ie1": "!Assigned",
+        "ie2": None,
+    }
+    assert dict(cards.dtypes)["custom_field_names"] == "array<string>"

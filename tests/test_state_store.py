@@ -199,3 +199,35 @@ def test_recover_orphans_skips_version_named_files(spark, store):
     # the stray file survives untouched; the store still reads
     assert os.path.isfile(os.path.join(store.root, "v00000002"))
     assert [r.entity_id for r in store.read(spark).collect()] == ["a"]
+
+
+def test_history_row_counts_match_reads(spark, store):
+    """``n_rows`` is observed on the write itself; it must equal what a
+    read of the published version counts, for a commit, a merge and a
+    zero-row commit (including one whose plan optimizes to empty)."""
+    store.commit(_df(spark, [("a", "t1"), ("b", "t1")]))
+    assert store.history()[-1].n_rows == store.read(spark).count() == 2
+    store.merge(_df(spark, [("b", "t9"), ("c", "t1")]))
+    assert store.history()[-1].n_rows == store.read(spark).count() == 3
+    store.commit(_df(spark, [("a", "t1")]).filter("title = 'none'"))
+    assert store.history()[-1].n_rows == store.read(spark).count() == 0
+    store.commit(_df(spark, [("a", "t1")]).limit(0))
+    assert store.history()[-1].n_rows == store.read(spark).count() == 0
+
+
+def test_read_starts_no_job_and_keeps_schema(spark, store, spark_jobs):
+    """The manifest carries each version's schema, so building a read
+    of any version infers nothing (no Spark job) and yields the schema
+    a parquet footer would."""
+    df = spark.createDataFrame(
+        [("a", 1, {"k": "v"})], "entity_id string, n long, field_values map<string,string>"
+    )
+    store.commit(df)
+    store.commit(_df(spark, [("a", "t1")]))
+    with spark_jobs() as jobs:
+        latest = store.read(spark)
+        first = store.read(spark, version=1)
+    assert jobs == []
+    assert first.schema == spark.read.parquet(store._dir(1)).schema
+    assert latest.schema == spark.read.parquet(store._dir(2)).schema
+    assert first.collect()[0].field_values == {"k": "v"}

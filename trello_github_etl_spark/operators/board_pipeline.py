@@ -3,9 +3,12 @@ lib/transform.js:257–305) and the quickview report
 (utils/board-quickview.js) as DataFrame transforms.
 
 Design: the board-local dimensions (lists, members, custom fields) are
-config-sized, so they ride along as broadcast map columns built with
-``map_from_entries`` — the Spark analog of the reference's in-memory
-lookup tables, with no per-row linear scans and no shuffles. Array
+config-sized — one board's worth, tens of rows — so they are collected
+to the driver in one job and inlined as literal ``create_map`` columns,
+the Spark analog of the reference's in-memory lookup tables
+(lib/transform.js:9, utils/board-quickview.js): no per-row linear
+scans, no shuffles, no broadcast sub-plans. A board whose dimensions
+do not fit in driver memory is outside this design. Array
 order is semantic everywhere (idMembers order drives owner
 resolution; customFieldItems order drives the report), so lookups use
 ``transform`` over the arrays rather than explode+join.
@@ -13,7 +16,9 @@ resolution; customFieldItems order drives the report), so lookups use
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trello_github_etl_spark.functions import text
@@ -27,18 +32,30 @@ LABEL_SENTINEL = "!Label"
 ASSIGNEE_SENTINEL = "!Assigned"
 
 
-def _map_col(dim: DataFrame, key: str, value: str, alias: str) -> DataFrame:
-    """Collapse a small dimension into one broadcastable map column."""
-    return dim.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col(key), F.col(value)))
-        ).alias(alias)
-    )
+def _dim_maps(
+    entities: dict[str, DataFrame], dims: dict[str, tuple[str, str, str]]
+) -> dict[str, Column]:
+    """Literal map columns for config-sized dimensions, collected in one
+    job. ``dims`` maps an alias to ``(entity, key column, value
+    column)``. Pairs keep the dimension's row order, so duplicate keys
+    resolve under the session's ``mapKeyDedupPolicy`` exactly as a map
+    built inside the plan would."""
+    tagged = [
+        entities[entity].select(
+            F.lit(alias).alias("_dim"), F.col(key).alias("_k"), F.col(value).alias("_v")
+        )
+        for alias, (entity, key, value) in dims.items()
+    ]
+    pairs: dict[str, list] = {alias: [] for alias in dims}
+    for r in reduce(DataFrame.unionByName, tagged).collect():
+        pairs[r["_dim"]] += [r["_k"], r["_v"]]
+    return {alias: _literal_map(kv) for alias, kv in pairs.items()}
 
 
-def _status_map_col(status_map: dict[str, str]):
-    pairs = [x for kv in status_map.items() for x in kv]
-    return F.create_map(*[F.lit(x) for x in pairs])
+def _literal_map(flat_pairs: list) -> Column:
+    """``[k1, v1, k2, v2, ...]`` as a literal map<string,string> column
+    (typed even when empty)."""
+    return F.create_map(*[F.lit(x) for x in flat_pairs]).cast("map<string,string>")
 
 
 def customize_cards(
@@ -54,25 +71,28 @@ def customize_cards(
     owner, fallback_owner (sentineled).
     """
     cards = entities["cards"]
-    lists_map = _map_col(entities["lists"], "id", "name", "_lists")
-    cf_map = _map_col(entities["custom_fields"], "id", "name", "_cfs")
-    members_map = _map_col(entities["members"], "id", "username", "_members")
+    maps = _dim_maps(
+        entities,
+        {
+            "lists": ("lists", "id", "name"),
+            "cfs": ("custom_fields", "id", "name"),
+            "members": ("members", "id", "username"),
+        },
+    )
+    status = _literal_map([x for kv in status_map.items() for x in kv])
 
     enriched = (
         cards.filter(~F.coalesce(F.col("closed"), F.lit(False)))
-        .crossJoin(F.broadcast(lists_map))
-        .crossJoin(F.broadcast(cf_map))
-        .crossJoin(F.broadcast(members_map))
-        .withColumn("card_type", F.try_element_at(F.col("_lists"), F.col("idList")))
+        .withColumn("card_type", F.try_element_at(maps["lists"], F.col("idList")))
         .withColumn(
-            "card_status", F.try_element_at(_status_map_col(status_map), F.col("card_type"))
+            "card_status", F.try_element_at(status, F.col("card_type"))
         )
         .filter(F.col("card_status").isNotNull())
         .withColumn(
             "custom_field_names",
             F.transform(
                 F.coalesce(F.col("customFieldItems"), F.array()),
-                lambda it: F.try_element_at(F.col("_cfs"), it["idCustomField"]),
+                lambda it: F.try_element_at(maps["cfs"], it["idCustomField"]),
             ),
         )
         .withColumn(
@@ -93,7 +113,7 @@ def customize_cards(
             "member_usernames",
             F.transform(
                 F.coalesce(F.col("idMembers"), F.array()),
-                lambda mid: F.try_element_at(F.col("_members"), mid),
+                lambda mid: F.try_element_at(maps["members"], mid),
             ),
         )
         .withColumn(
@@ -111,7 +131,7 @@ def customize_cards(
     )
 
     resolved = resolve_owners(enriched, entities["members"])
-    return with_owner_sentinels(resolved).drop("_lists", "_cfs", "_members")
+    return with_owner_sentinels(resolved)
 
 
 def customize_check_items(
@@ -130,16 +150,15 @@ def customize_check_items(
             items.card_id == F.col("_acid"),
             "left_semi",
         )
-    members_map = _map_col(entities["members"], "id", "username", "_members")
+    members = _dim_maps(entities, {"members": ("members", "id", "username")})["members"]
     parsed = (
         items.filter(F.col("state") != "complete")
-        .crossJoin(F.broadcast(members_map))
         .withColumn("_p", parse_check_item(F.col("name")))
         .withColumn("task_type", text.task_type(F.col("checklist_name")))
         .withColumn(
             "assignee",
             F.when(F.col("idMember").isNull(), F.lit(ASSIGNEE_SENTINEL)).otherwise(
-                F.try_element_at(F.col("_members"), F.col("idMember"))
+                F.try_element_at(members, F.col("idMember"))
             ),
         )
     )
@@ -189,23 +208,27 @@ def quickview_table(
 
 
 def quickview_distincts(cards: DataFrame, items: DataFrame) -> DataFrame:
-    """The 'Active X' distinct sections (board-quickview.js:194–204)."""
-    sections = [
-        cards.select(F.lit("Columns").alias("category"), F.col("card_type").alias("value")),
-        cards.select(F.lit("Owners").alias("category"), F.col("owner").alias("value")),
-        cards.select(
-            F.lit("Labels").alias("category"), F.explode("label_names").alias("value")
-        ),
-        cards.select(
-            F.lit("Custom Fields").alias("category"),
-            F.explode("custom_field_names").alias("value"),
-        ),
-        items.select(
-            F.lit("Checklists").alias("category"), F.col("task_type").alias("value")
-        ),
-        items.select(F.lit("Members").alias("category"), F.col("assignee").alias("value")),
-    ]
-    out = sections[0]
-    for s in sections[1:]:
-        out = out.unionByName(s)
-    return out.distinct().orderBy("category", "value")
+    """The 'Active X' distinct sections (board-quickview.js:194–204):
+    one tagged projection over the cards and one over the items."""
+
+    def tagged(category: str, value) -> Column:
+        return F.struct(F.lit(category).alias("category"), value.alias("value"))
+
+    def tagged_each(category: str, values: str) -> Column:
+        return F.transform(values, lambda v: tagged(category, v))
+
+    card_values = cards.select(
+        F.inline(
+            F.concat(
+                F.array(tagged("Columns", F.col("card_type")), tagged("Owners", F.col("owner"))),
+                tagged_each("Labels", "label_names"),
+                tagged_each("Custom Fields", "custom_field_names"),
+            )
+        )
+    )
+    item_values = items.select(
+        F.inline(
+            F.array(tagged("Checklists", F.col("task_type")), tagged("Members", F.col("assignee")))
+        )
+    )
+    return card_values.unionByName(item_values).distinct().orderBy("category", "value")

@@ -14,6 +14,12 @@ Layout:
 Commit protocol: write the new version DIRECTORY first (never touched
 again afterwards), then publish it by atomically replacing
 ``_manifest.json`` (write temp + ``os.replace``, atomic on POSIX).
+Each version's history entry also carries the frame's schema (JSON)
+and its row count, observed on the write itself (``DataFrame.observe``),
+so a commit never re-scans what it wrote to count it and a read hands
+the reader its schema instead of inferring it from the parquet footers
+(a Spark job per read).
+
 Readers resolve the manifest and only ever scan a published,
 immutable directory, so:
 
@@ -62,7 +68,9 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from trello_github_etl_spark.plans.upserts import merge_state
 
@@ -80,6 +88,7 @@ class CommitInfo:
     op: str
     n_rows: int
     ts: float
+    schema: dict | None = None  # StructType.jsonValue(); absent in older manifests
 
 
 class VersionedStateStore:
@@ -161,8 +170,11 @@ class VersionedStateStore:
                 f"version directory v{version:08d} already claimed by "
                 "another writer"
             )
+        rows = Observation("commit")
         try:
-            df.write.mode("errorifexists").parquet(path)
+            df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(
+                "errorifexists"
+            ).parquet(path)
         except Exception as e:
             # Distinguish "a competitor took this version" from "OUR
             # write failed". Deleting a competitor's directory would
@@ -189,7 +201,6 @@ class VersionedStateStore:
 
             shutil.rmtree(path, ignore_errors=True)
             raise
-        n = df.sparkSession.read.parquet(path).count()
         # CAS re-check at the publish point: a competing writer may
         # have published while this one was writing parquet.
         m2 = self._read_manifest()
@@ -203,7 +214,13 @@ class VersionedStateStore:
             )
         m2["current"] = version
         m2["history"].append(
-            {"version": version, "op": op, "n_rows": n, "ts": time.time()}
+            {
+                "version": version,
+                "op": op,
+                "n_rows": rows.get["n"],
+                "ts": time.time(),
+                "schema": df.schema.jsonValue(),
+            }
         )
         if meta:
             m2.setdefault("meta", {}).update(meta)
@@ -266,10 +283,15 @@ class VersionedStateStore:
         v = m["current"] if version is None else version
         if v == 0:
             raise ValueError("state store has no committed version")
-        committed = {h["version"] for h in m["history"]}
-        if v not in committed:
+        entry = next((h for h in m["history"] if h["version"] == v), None)
+        if entry is None:
             raise ValueError(f"version {v} was never committed")
-        return spark.read.parquet(self._dir(v))
+        schema = entry.get("schema")
+        return spark.read.load(
+            self._dir(v),
+            format="parquet",
+            schema=StructType.fromJson(schema) if schema else None,
+        )
 
     def merge(self, applied: DataFrame, key: str = "entity_id") -> int:
         """MERGE: applied rows replace matching keys, everything else
